@@ -16,13 +16,27 @@ Update patterns implemented:
 - ``drop_if_exists``        → K6 (DROP TABLE IF EXISTS)
 - ``skip_if_present``       → the count-check guards
   (dags/mitma/bronze_mitma.py:38-47, dags/mitma/silver_mitma.py:17-24)
+
+Reads take a table's schema from its data, where the reference takes it
+from its catalog. Spark writes its exact Catalyst schema into every file
+footer (``org.apache.spark.sql.parquet.row.metadata``).
+``read_parquet_dir`` reads that key from one footer on the driver with
+pyarrow and hands it to ``spark.read.schema(...)``, so a read launches no
+schema-inference job. The schema is the one inference would find because
+tables are single-schema: ``mergeSchema`` stays off, so inference also
+reads a single footer. Partition columns still come from the ``k=v``
+directory names. A footer without the key (a table written by pyarrow)
+or one that cannot be read falls back to inference.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,6 +54,54 @@ def zorder_expr(x_col: str, y_col: str, bits: int = 16) -> str:
         terms.append(f"(((({x_col}) & {mask}) >> {i}) & 1) << {2 * i}")
         terms.append(f"(((({y_col}) & {mask}) >> {i}) & 1) << {2 * i + 1}")
     return "CAST(" + " | ".join(f"({t})" for t in terms) + " AS BIGINT)"
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_data_file(path: str) -> str | None:
+    """First data file of a parquet directory in sorted order, descending
+    into ``k=v`` partition directories; None if there is none. Skips what
+    Spark's file listing skips: dot files (``.crc``) and ``_`` entries such
+    as ``_SUCCESS``, but not ``_k=v`` directories."""
+    try:
+        names = sorted(os.listdir(path))
+    except OSError:
+        return None
+    for name in names:
+        if name.startswith(".") or (name.startswith("_") and "=" not in name):
+            continue
+        full = os.path.join(path, name)
+        if not os.path.isdir(full):
+            return full
+        if "=" in name:
+            found = _first_data_file(full)
+            if found is not None:
+                return found
+    return None
+
+
+def footer_schema(path: str) -> T.StructType | None:
+    """The Spark schema stored in the footer of the directory's first data
+    file, without launching a job; None when that file is missing, cannot
+    be read or was not written by Spark."""
+    first = _first_data_file(path)
+    if first is None:
+        return None
+    try:
+        meta = pq.read_metadata(first).metadata or {}
+    except (OSError, pa.ArrowInvalid):
+        return None
+    raw = meta.get(_SPARK_SCHEMA_KEY)
+    return None if raw is None else T.StructType.fromJson(json.loads(raw))
+
+
+def read_parquet_dir(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from the footer
+    (``footer_schema``) instead of inferred by a Spark job."""
+    schema = footer_schema(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 class Warehouse:
@@ -61,9 +123,9 @@ class Warehouse:
         )
 
     def list_tables(self) -> list[str]:
-        return sorted(
-            d for d in os.listdir(self.root) if os.path.isdir(os.path.join(self.root, d))
-        )
+        """Readable tables only: snapshot stores (``<name>__snapshots``) and
+        other directories without table data are not tables."""
+        return sorted(d for d in os.listdir(self.root) if self.table_exists(d))
 
     def columns(self, name: str) -> list[str]:
         """PRAGMA table_info equivalent — drives the reference's runtime
@@ -72,7 +134,7 @@ class Warehouse:
         return self.read(name).columns
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
+        return read_parquet_dir(self.spark, self.path(name))
 
     # --- sinks -------------------------------------------------------------
     def create_if_not_exists(self, name: str, schema: T.StructType, partition_by: list[str] | None = None) -> None:
@@ -290,7 +352,7 @@ def snapshot_read(wh: Warehouse, name: str, version: int | None = None) -> DataF
     if version is None:
         with open(os.path.join(base, "_CURRENT")) as f:
             version = int(f.read().strip())
-    return wh.spark.read.parquet(os.path.join(base, f"v{version}"))
+    return read_parquet_dir(wh.spark, os.path.join(base, f"v{version}"))
 
 
 def snapshot_rollback(wh: Warehouse, name: str, version: int) -> None:
@@ -338,7 +400,7 @@ def snapshot_publish_audited(
     version = max(snapshot_versions(wh, name), default=-1) + 1
     staged = os.path.join(base, f"v{version}")
     df.write.mode("overwrite").parquet(staged)
-    staged_df = wh.spark.read.parquet(staged)
+    staged_df = read_parquet_dir(wh.spark, staged)
     for audit in audits:
         ok, msg = audit(staged_df)
         if not ok:

@@ -222,6 +222,21 @@ def test_schema_dump(wh, tmp_path):
     assert "gold_typical_day_patterns" in tables and "silver_mobility_trips" in tables
 
 
+def test_schema_dump_skips_snapshot_stores(spark, tmp_path):
+    """A snapshot store (``<name>__snapshots``) next to a plain table is not
+    a table: ``list_tables`` leaves it out and the dump reads only the
+    table (reading the store failed with UNABLE_TO_INFER_SCHEMA)."""
+    from lakehouse_spain_mobility_spark.catalog import snapshot_replace
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.create_or_replace("plain", spark.range(0, 3))
+    snapshot_replace(wh, "gold_snap", spark.range(0, 2))
+    assert wh.list_tables() == ["plain"]
+    out = reports.dump_schemas_csv(wh, str(tmp_path / "schemas.csv"))
+    lines = open(out, encoding="utf-8").read().strip().splitlines()
+    assert lines == ["table,column,type", "plain,id,bigint"]
+
+
 def test_bq1_all_districts_enumeration(wh, tmp_path):
     """The EP3/BQ1 loop produces one report per distinct district."""
     arts = reports.run_bq1_all_districts(wh, str(tmp_path / "bq1"))

@@ -35,6 +35,7 @@ import json
 import os
 import shutil
 
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -104,6 +105,19 @@ def read_parquet_dir(spark: SparkSession, path: str) -> DataFrame:
     return reader.parquet(path)
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-side relation (ledger rows, dimension rows) as one
+    partition. Built from pandas it plans as a ``LocalTableScan``. Built
+    from a Python list it would plan as ``Scan ExistingRDD`` over
+    ``defaultParallelism`` partitions, fork a Python worker to write, and
+    leave an empty file beside the data. ``coalesce(1)`` keeps a write to
+    one file (a ``LocalTableScan`` spreads over min(rows, cores)
+    partitions)."""
+    struct = T.StructType.fromDDL(schema)
+    pdf = pd.DataFrame.from_records(rows, columns=struct.names)
+    return spark.createDataFrame(pdf, struct).coalesce(1)
+
+
 class Warehouse:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -126,12 +140,6 @@ class Warehouse:
         """Readable tables only: snapshot stores (``<name>__snapshots``) and
         other directories without table data are not tables."""
         return sorted(d for d in os.listdir(self.root) if self.table_exists(d))
-
-    def columns(self, name: str) -> list[str]:
-        """PRAGMA table_info equivalent — drives the reference's runtime
-        column-fallback logic
-        (dags/bussiness_layer/transform_gold_long_trip_dependency.py:22-33)."""
-        return self.read(name).columns
 
     def read(self, name: str) -> DataFrame:
         return read_parquet_dir(self.spark, self.path(name))

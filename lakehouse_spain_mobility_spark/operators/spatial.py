@@ -6,10 +6,15 @@ to:
 - native column math: ST_Point/ST_X/ST_Y (plain doubles), distances
   (functions/geo.py), bbox predicates;
 - this module's pure-Python geometry kernels wrapped as **Arrow-batched
-  pandas UDFs**: parsing, centroid, area, bounds, point-in-polygon,
-  polygon validity, dissolve-centroid, and the EPSG:25830 (UTM 30N) →
-  EPSG:4326 transform the geometry silver hop needs
-  (ST_Transform — dags/geometry/transform_silver_geometry.py:20,26).
+  pandas UDFs**: parsing, centroid, bounds, point-in-polygon, polygon
+  validity, and the EPSG:25830 (UTM 30N) → EPSG:4326 transform the
+  geometry silver hop needs
+  (ST_Transform — dags/geometry/transform_silver_geometry.py:20,26);
+- the same kernels called directly on the driver where the input is a
+  collected handful of polygons: the municipality dissolve-centroid
+  (``pipelines/geometry.py:municipality_centroids``, ST_Centroid of
+  ST_Union_Agg — dags/gravity/create_centroids.py:12-19) runs there, so
+  the gold refresh starts no Python worker.
 
 shapely/Sedona are optional upgrades; nothing here imports them. The
 kernels are numpy-vectorized per ring, so the UDF cost is Arrow transfer +
@@ -281,15 +286,6 @@ def st_is_valid(wkt: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-@F.pandas_udf(T.DoubleType())
-def st_area(wkt: pd.Series) -> pd.Series:
-    out = []
-    for w in wkt:
-        rings = parse_polygon_rings(w)
-        out.append(abs(ring_area_centroid(rings[0])[0]) if rings else None)
-    return pd.Series(out, dtype="float64")
-
-
 @F.pandas_udf(
     T.StructType(
         [
@@ -422,12 +418,13 @@ def _geom_stats_vectorized(wkt: pd.Series) -> pd.DataFrame | None:
 )
 def st_geom_stats(wkt: pd.Series) -> pd.DataFrame:
     """Fused per-geometry stats: ONE WKT parse yielding area + centroid +
-    bounds. st_area/st_centroid/st_bounds each re-parse the string, so a
-    query needing all three paid 3-4 Arrow passes and 3-4 parses per row
-    (spatial_dissolve's measured sf10 cost). Values are bit-identical to
-    the single-purpose kernels: area = |signed area of ring 0| (st_area's
-    convention), centroid = area-weighted across rings (geom_centroid),
-    bounds over all ring vertices (st_bounds).
+    bounds. Separate area/centroid/bounds UDFs each re-parse the string,
+    so a query needing all three paid 3-4 Arrow passes and 3-4 parses per
+    row (spatial_dissolve's measured sf10 cost). Values are bit-identical
+    to the single-purpose kernels: area = |signed area of ring 0| (the
+    dissolve weight of ``municipality_centroids``), centroid =
+    area-weighted across rings (geom_centroid), bounds over all ring
+    vertices (st_bounds).
 
     When every row in the Arrow batch is a simple single-ring POLYGON
     with verifiably exact coordinates, a fully vectorized path runs
@@ -526,23 +523,3 @@ def make_polygon_predicate_udf(polygon_wkt: str, predicate: str = "intersects"):
 
     return pred
 
-
-def dissolve_centroids(df, group_cols: list[str], wkt_col: str = "geometry"):
-    """ST_Centroid(ST_Union_Agg(geom)) per group
-    (dags/gravity/create_centroids.py:12-19): for non-overlapping polygons
-    (census sections) the union's centroid equals the area-weighted
-    centroid of the parts — computed relationally, no geometry union
-    needed. Returns (group_cols..., lon, lat)."""
-    from pyspark.sql import functions as FF
-
-    parts = df.withColumn("_c", st_centroid(FF.col(wkt_col))).withColumn(
-        "_a", st_area(FF.col(wkt_col))
-    )
-    w = FF.col("_a")
-    return (
-        parts.groupBy(*group_cols)
-        .agg(
-            (FF.sum(FF.col("_c.lon") * w) / FF.sum(w)).alias("lon"),
-            (FF.sum(FF.col("_c.lat") * w) / FF.sum(w)).alias("lat"),
-        )
-    )

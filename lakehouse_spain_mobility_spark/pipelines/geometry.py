@@ -2,9 +2,11 @@
 polygon-scoped gold extraction (dags/geometry/*, dags/gravity/extract_geometry.py).
 
 Silver schema per FIXTURES §7: WKT polygon + id hierarchy + centroid.
-The CRS transform (EPSG:25830 → 4326) and centroid are pandas-UDF
-kernels from operators/spatial.py (ST_Transform / ST_Centroid —
-dags/geometry/transform_silver_geometry.py:20,26).
+The CRS transform (EPSG:25830 → 4326) and the section centroid are
+pandas-UDF kernels from operators/spatial.py (ST_Transform / ST_Centroid —
+dags/geometry/transform_silver_geometry.py:20,26). The municipality
+centroids the gold refresh needs run the same kernels on the driver over
+the extracted gold region (``municipality_centroids``).
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import Warehouse
+from ..catalog import Warehouse, local_frame
 from ..operators import spatial
 
 SILVER_TABLE = "silver_geometry_wgs84"
@@ -133,8 +135,33 @@ def extraction_summary(wh: Warehouse, year: int) -> dict:
 
 def municipality_centroids(wh: Warehouse) -> DataFrame:
     """temp_municipality_centroids (dags/gravity/create_centroids.py:12-19):
-    dissolve census sections per municipality → area-weighted centroid."""
-    gold = wh.read(GOLD_TABLE)
-    return spatial.dissolve_centroids(gold, ["municipality_id"], "geometry").select(
-        F.col("municipality_id").alias("code"), "lon", "lat"
-    )
+    ST_Centroid(ST_Union_Agg(geom)) per municipality. For non-overlapping
+    census sections the union's centroid is the area-weighted centroid of
+    the parts, so no geometry union is needed.
+
+    The gold region is one study area's census sections (thousands at
+    most), so the kernels run on the driver over one collect and no Python
+    worker starts: per section the centroid is ``geom_centroid`` and the
+    weight is |signed area of ring 0| (``st_geom_stats``'s area). The
+    weighted sums accumulate in row order, the order a one-partition
+    ``sum`` aggregate adds them. A municipality whose sections have zero
+    total area gets NULL ``lon``/``lat``; dividing by that zero in Spark
+    raises ``DIVIDE_BY_ZERO`` under ANSI. Returns (code, lon, lat)
+    as a one-partition local relation."""
+    rows = wh.read(GOLD_TABLE).select("municipality_id", "geometry").collect()
+    sums: dict[str | None, list[float]] = {}
+    for muni, wkt in rows:
+        s = sums.setdefault(muni, [0.0, 0.0, 0.0])
+        rings = spatial.parse_polygon_rings(wkt)
+        if not rings:
+            continue  # no polygon, no weight (a SQL sum skips a NULL weight)
+        w = abs(spatial.ring_area_centroid(rings[0])[0])
+        lon, lat = spatial.geom_centroid(wkt)
+        s[0] += lon * w
+        s[1] += lat * w
+        s[2] += w
+    out = [
+        (muni, sx / sw, sy / sw) if sw else (muni, None, None)
+        for muni, (sx, sy, sw) in sums.items()
+    ]
+    return local_frame(wh.spark, out, "code string, lon double, lat double")

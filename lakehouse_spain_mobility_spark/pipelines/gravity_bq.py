@@ -6,6 +6,11 @@ Reference: dags/gravity/gravity_dag.py:45-103 (11-task chain) and
 dags/bussiness_layer/transform_gold_long_trip_dependency.py. The five
 ``temp_*`` tables become DataFrames (SURVEY §3 EP2 note); cleanup (K6)
 therefore disappears.
+
+Municipality centroids come from ``geometry.municipality_centroids``, which
+runs the geometry kernels on the driver and hands the plans a one-partition
+local relation, so the refresh starts no Python worker. BQ2 and BQ3 read
+silver through the same ``trips_by_municipality`` rollup.
 """
 
 from __future__ import annotations
@@ -16,7 +21,7 @@ from pyspark.sql import functions as F
 from ..catalog import Warehouse
 from ..functions.deterministic import davg, dsum
 from ..functions.geo import geodesic_km, haversine_km
-from ..functions.scalar import strip_zone_suffix, zone_to_municipality
+from ..functions.scalar import zone_to_municipality
 from ..operators.gravity import assemble_gravity_data, gravity_analysis, infrastructure_ranking
 from ..operators.long_trip import long_trip_dependency
 from .geometry import municipality_centroids
@@ -107,36 +112,15 @@ def run_gravity_pipeline(wh: Warehouse, year: int) -> tuple[DataFrame, DataFrame
     return wh.read(GOLD_GRAVITY), wh.read(GOLD_RANKING)
 
 
-def _pick(columns: list[str], candidates: list[str]) -> str:
-    """Runtime column fallback (U5/S6 —
-    dags/bussiness_layer/transform_gold_long_trip_dependency.py:22-33):
-    first candidate present wins."""
-    for c in candidates:
-        if c in columns:
-            return c
-    raise KeyError(f"none of {candidates} in {columns}")
-
-
 def run_long_trip_pipeline(wh: Warehouse, long_km: float = 15.0) -> DataFrame:
-    """EP3 (BQ3): trip-ID normalization → polygon semi-filter (here: the
-    municipality set with known centroids) → NULL-aware distances →
-    conditional aggregation → dependency ratio (…long_trip_dependency.py:85-159)."""
-    silver = wh.read("silver_mobility_trips")
-    cols = silver.columns
-    origin_col = _pick(cols, ["origin_zone_id", "origin_zone"])
-    dest_col = _pick(cols, ["destination_zone_id", "destination_zone"])
-    trips_col = _pick(cols, ["trips", "total_trips"])
-    trips = (
-        silver.filter(F.col(trips_col).isNotNull())
-        .groupBy(
-            zone_to_municipality(strip_zone_suffix(F.col(origin_col))).alias("origin_code"),
-            zone_to_municipality(strip_zone_suffix(F.col(dest_col))).alias("dest_code"),
-        )
-        .agg(dsum(F.col(trips_col)).alias("total_trips"))
-    )
+    """EP3 (BQ3): polygon semi-filter (here: the municipality set with
+    known centroids) → NULL-aware distances → conditional aggregation →
+    dependency ratio (…long_trip_dependency.py:85-159), over BQ2's
+    municipality-pair rollup. The reference's trip-ID normalization
+    (:90-98) is silver's: zone suffixes stripped, NULL trips dropped."""
     centroids = municipality_centroids(wh)
     out = long_trip_dependency(
-        trips, centroids, origin_filter=F.lit(True), long_km=long_km
+        trips_by_municipality(wh), centroids, origin_filter=F.lit(True), long_km=long_km
     )
     wh.create_or_replace(GOLD_LONG_TRIP, out)
     return wh.read(GOLD_LONG_TRIP)

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..catalog import Warehouse
+from ..catalog import Warehouse, local_frame
 from ..functions import scalar
 from ..functions.holidays_es import holidays_rows
 from ..operators.outlier_stats import sigma_filtered_stats_window
@@ -98,8 +98,7 @@ def ingest_holidays(wh: Warehouse, years: list[int]) -> None:
     if not new_years:
         return
     rows = holidays_rows(new_years)
-    df = wh.spark.createDataFrame(rows, "date date, is_holiday boolean")
-    wh.append(HOLIDAYS_TABLE, df)
+    wh.append(HOLIDAYS_TABLE, local_frame(wh.spark, rows, "date date, is_holiday boolean"))
 
 
 def ingest_bronze(wh: Warehouse, raw: DataFrame, file_date: str) -> bool:
@@ -123,8 +122,8 @@ def ingest_bronze(wh: Warehouse, raw: DataFrame, file_date: str) -> bool:
     )
     wh.append(BRONZE_TABLE, out)
     n = wh.count_where(BRONZE_TABLE, F.col("date") == file_date)
-    ledger_row = wh.spark.createDataFrame(
-        [(file_date, n, "ingested")], "file_date string, n_rows bigint, status string"
+    ledger_row = local_frame(
+        wh.spark, [(file_date, n, "ingested")], "file_date string, n_rows bigint, status string"
     ).withColumn("ingested_at", F.current_timestamp())
     wh.append(LEDGER_TABLE, ledger_row)
     return True

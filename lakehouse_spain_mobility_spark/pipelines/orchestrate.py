@@ -30,7 +30,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import functions as F
 
-from ..catalog import Warehouse
+from ..catalog import Warehouse, local_frame
 
 RUN_LEDGER = "task_run_ledger"
 _SCHEMA = (
@@ -39,8 +39,8 @@ _SCHEMA = (
 
 
 def _record(wh: Warehouse, task: str, key: str, attempt: int, status: str, error: str | None) -> None:
-    row = wh.spark.createDataFrame(
-        [(task, key, attempt, status, (error or "")[:2000])], _SCHEMA
+    row = local_frame(
+        wh.spark, [(task, key, attempt, status, (error or "")[:2000])], _SCHEMA
     ).withColumn("ts", F.current_timestamp())
     if wh.table_exists(RUN_LEDGER):
         wh.append(RUN_LEDGER, row)

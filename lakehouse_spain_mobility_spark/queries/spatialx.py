@@ -116,8 +116,9 @@ register(
 # through the REAL geometry kernels (``operators/spatial.py``: WKT ring
 # parser → shoelace area/centroid → bounds, fused since round 5 into the
 # single-parse ``st_geom_stats`` pass; the dissolve math — non-overlapping
-# union centroid ≡ area-weighted centroid, ``dissolve_centroids`` — runs
-# as the aggregation), while the DuckDB oracle parses the same WKT text
+# union centroid ≡ area-weighted centroid, the rule the pipeline's
+# ``geometry.municipality_centroids`` applies on the driver — runs as the
+# aggregation), while the DuckDB oracle parses the same WKT text
 # and evaluates the same shoelace sums in SQL (round 5; the old twin's
 # closed-form rectangle algebra compared a kernel against a constant).
 # Bit-parity by construction: integer coords make every shoelace
@@ -150,13 +151,13 @@ def q_spatial_dissolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = spread(parts, spark)
     # ONE fused kernel pass (st_geom_stats: one WKT parse → area, centroid,
     # bounds) feeding ONE aggregation. The round-4 form ran FOUR pandas-UDF
-    # passes (centroid + area inside dissolve_centroids, area + bounds for
+    # passes (centroid + area for the dissolve, area + bounds for
     # the extent branch) over a localCheckpoint'ed relation and joined the
     # two branches back — 4 parses + 4 Arrow round-trips + a checkpoint per
     # row, for values this single pass produces bit-identically. The
-    # area-weighted centroid aggregation IS the dissolve operator's math
-    # (dissolve_centroids — non-overlapping union centroid ≡ area-weighted
-    # centroid of parts); reference: dags/gravity/create_centroids.py:12-19
+    # area-weighted centroid aggregation IS the pipeline's dissolve math
+    # (geometry.municipality_centroids — non-overlapping union centroid ≡
+    # area-weighted centroid of parts); reference: dags/gravity/create_centroids.py:12-19
     # + create_map.py:18-44.
     g = parts.select("grp", st_geom_stats(F.col("geometry")).alias("g"))
     a = F.col("g.area")

@@ -1,6 +1,8 @@
 from __future__ import annotations
 
+import itertools
 import os
+import time
 
 import pytest
 
@@ -22,3 +24,19 @@ def spark(tmp_path_factory):
     )
     yield spark
     spark.stop()
+
+
+_groups = itertools.count()
+
+
+def jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn`` launches, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-launched-{next(_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    time.sleep(1.0)  # the status store is fed asynchronously
+    return len(sc.statusTracker().getJobIdsForGroup(group))

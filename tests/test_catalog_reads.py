@@ -9,9 +9,7 @@ their answer.
 from __future__ import annotations
 
 import datetime
-import itertools
 import os
-import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -28,20 +26,7 @@ from lakehouse_spain_mobility_spark.catalog import (
 )
 from lakehouse_spain_mobility_spark.pipelines import mitma, orchestrate
 
-_groups = itertools.count()
-
-
-def jobs_launched(spark, fn) -> int:
-    """Spark jobs ``fn`` launches, counted under a job group of its own."""
-    sc = spark.sparkContext
-    group = f"catalog-reads-{next(_groups)}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    time.sleep(1.0)  # the status store is fed asynchronously
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+from conftest import jobs_launched
 
 
 @pytest.fixture(scope="module")

@@ -5,13 +5,20 @@ invariant suite (SURVEY §5)."""
 
 from __future__ import annotations
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
 import fixtures as fx
 from lakehouse_spain_mobility_spark.catalog import Warehouse
+from lakehouse_spain_mobility_spark.operators import spatial
 from lakehouse_spain_mobility_spark.pipelines import economy, geometry, gravity_bq, mitma, population
 from lakehouse_spain_mobility_spark.sources.csv import read_csv_inferred
+
+from conftest import jobs_launched
+
+JOB_BUDGET_BQ2_BQ3 = 19
 
 
 @pytest.fixture(scope="module")
@@ -163,6 +170,71 @@ def test_long_trip_pipeline_bq3(wh):
     # the 15 km cutoff discriminates (FIXTURES §8): both classes present
     assert out.filter(F.col("long_trips") > 0).count() > 0
     assert out.filter(F.col("long_trips") < F.col("known_distance_trips")).count() > 0
+
+
+def test_municipality_centroids_are_sequential_kernel_sums(wh):
+    """ST_Centroid(ST_Union_Agg) per municipality equals the area-weighted
+    mean of ``geom_centroid`` with |ring-0 area| weights, summed in row
+    order, to the bit; on the fixture grid it is each cell's analytic
+    centroid (two half-cell squares side by side)."""
+    sums: dict[str, list[float]] = {}
+    for r in wh.read(geometry.GOLD_TABLE).collect():
+        w = abs(spatial.ring_area_centroid(spatial.parse_polygon_rings(r["geometry"])[0])[0])
+        lon, lat = spatial.geom_centroid(r["geometry"])
+        s = sums.setdefault(r["municipality_id"], [0.0, 0.0, 0.0])
+        s[0] += lon * w
+        s[1] += lat * w
+        s[2] += w
+    expected = {m: (sx / sw, sy / sw) for m, (sx, sy, sw) in sums.items()}
+    got = {r["code"]: (r["lon"], r["lat"]) for r in geometry.municipality_centroids(wh).collect()}
+    assert got == expected
+    for i, muni in enumerate(fx.MUNI_CODES):
+        lon, lat = fx.muni_cell(i)
+        assert abs(got[muni][0] - (lon + fx.CELL_DEG / 2)) < 1e-9
+        assert abs(got[muni][1] - (lat + fx.CELL_DEG / 4)) < 1e-9
+
+
+def test_zero_area_municipality_gets_null_centroid(wh, spark, tmp_path):
+    """A municipality whose sections have zero total area has no centroid
+    (a Spark division by that zero raises DIVIDE_BY_ZERO under ANSI): BQ2
+    and BQ3 still complete, and BQ3 reports that origin as UNKNOWN."""
+    shutil.copytree(wh.root, tmp_path / "wh")
+    degenerate = Warehouse(spark, str(tmp_path / "wh"))
+    muni = fx.MUNI_CODES[0]
+    rows = [r.asDict() for r in degenerate.read(geometry.GOLD_TABLE).collect()]
+    for r in rows:
+        if r["municipality_id"] == muni:
+            x, y = spatial.parse_polygon_rings(r["geometry"])[0][0]
+            r["geometry"] = f"POLYGON (({x} {y}, {x} {y}, {x} {y}, {x} {y}))"
+    degenerate.create_or_replace(
+        geometry.GOLD_TABLE, spark.createDataFrame(rows, geometry.SILVER_SCHEMA)
+    )
+    centroids = {r["code"]: r for r in geometry.municipality_centroids(degenerate).collect()}
+    assert centroids[muni]["lon"] is None and centroids[muni]["lat"] is None
+    assert all(r["lon"] is not None for c, r in centroids.items() if c != muni)
+
+    analysis, _ = gravity_bq.run_gravity_pipeline(degenerate, fx.YEAR)
+    assert analysis.filter((F.col("origin_code") == muni) | (F.col("dest_code") == muni)).count() == 0
+    levels = {
+        r["origin_code"]: r["dependency_level"]
+        for r in gravity_bq.run_long_trip_pipeline(degenerate).collect()
+    }
+    assert levels[muni] == "UNKNOWN"
+    assert all(level != "UNKNOWN" for m, level in levels.items() if m != muni)
+
+
+def test_bq2_bq3_job_budget(wh, spark):
+    """The BQ2 + BQ3 refresh at fixture scale stays within its Spark job
+    budget: 19, what it launched when the centroids were pandas UDFs. The
+    driver-side centroids cost one collect per pipeline and add none."""
+    n = jobs_launched(
+        spark,
+        lambda: (
+            gravity_bq.run_gravity_pipeline(wh, fx.YEAR),
+            gravity_bq.run_long_trip_pipeline(wh),
+        ),
+    )
+    assert n <= JOB_BUDGET_BQ2_BQ3, n
 
 
 def test_silver_partition_pruning(wh):

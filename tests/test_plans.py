@@ -4,8 +4,17 @@ prune columns, the disjunctive join never degrades to a nested loop."""
 
 from __future__ import annotations
 
+import datetime
+
+import pytest
 from pyspark.sql import functions as F
 
+import fixtures as fx
+from lakehouse_spain_mobility_spark.catalog import Warehouse
+from lakehouse_spain_mobility_spark.operators import spatial
+from lakehouse_spain_mobility_spark.operators.gravity import assemble_gravity_data
+from lakehouse_spain_mobility_spark.operators.long_trip import long_trip_dependency
+from lakehouse_spain_mobility_spark.pipelines import economy, geometry, gravity_bq, mitma, population
 from lakehouse_spain_mobility_spark.plans import inspect as pi
 from lakehouse_spain_mobility_spark.queries import load_all
 from lakehouse_spain_mobility_spark.queries.tables import load
@@ -335,9 +344,6 @@ def test_substring_span_dedup_no_pair_enumeration(spark):
     head = final.split("== Initial Plan ==")[0]
     import re as _re
     assert len(_re.findall(r"\bSort \[", head)) <= 1, head[:2000]
-
-
-import pytest
 
 
 @pytest.mark.parametrize(
@@ -743,3 +749,76 @@ def test_typical_day_cube_form_identical(spark):
         tuple(r) for r in q_typical_day(spark, SF_DIR_ORACLE, form="cube").collect()
     )
     assert a == b and len(a) > 0
+
+
+# --- gold refresh (BQ2/BQ3): no Python worker --------------------------------
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInPandas", "FlatMapGroupsInPandas")
+
+
+@pytest.fixture(scope="module")
+def refresh_wh(spark, tmp_path_factory):
+    """The tables the BQ2/BQ3 refresh reads, at a few rows each."""
+    wh = Warehouse(spark, str(tmp_path_factory.mktemp("wh_refresh_plans")))
+    mitma.ensure_tables(wh)
+    wh.replace_partition(
+        mitma.SILVER_TABLE,
+        spark.createDataFrame(
+            [(datetime.date(2023, 2, 1), 8, "4625001001", "4625101001", 50.0, 1)],
+            mitma.SILVER_SCHEMA,
+        ),
+        "date",
+    )
+    gold = [
+        (wkt, sec, dist, muni, prov, cca, None, None, year)
+        for wkt, sec, dist, muni, prov, cca, year in fx.geometry_rows()
+    ]
+    wh.create_or_replace(geometry.GOLD_TABLE, spark.createDataFrame(gold, geometry.SILVER_SCHEMA))
+    wh.create_or_replace(
+        economy.SILVER_TABLE,
+        spark.createDataFrame(
+            [(m, m + "01", m + "01001", fx.YEAR, 20000.0) for m in fx.MUNI_CODES],
+            economy.SILVER_SCHEMA,
+        ),
+    )
+    wh.create_or_replace(
+        population.SILVER_TABLE,
+        spark.createDataFrame([(m, fx.YEAR, 1000) for m in fx.MUNI_CODES], population.SILVER_SCHEMA),
+    )
+    return wh
+
+
+def test_municipality_centroids_plan_one_partition_local_relation(refresh_wh):
+    centroids = geometry.municipality_centroids(refresh_wh)
+    plan = pi.executed_plan(centroids)
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert centroids.rdd.getNumPartitions() == 1
+
+
+def test_gold_refresh_frames_run_no_python_udf(refresh_wh):
+    """The frames BQ2 and BQ3 write (centroids, distances, the trip and
+    economy rollups, the assembled gravity data and the long-trip
+    dependency) plan no Python evaluation node: a Python UDF would start
+    worker processes in every refresh."""
+    wh = refresh_wh
+    centroids = geometry.municipality_centroids(wh)
+    distances = gravity_bq.municipality_distances(centroids)
+    trips = gravity_bq.trips_by_municipality(wh)
+    frames = {
+        "centroids": centroids,
+        "distances": distances,
+        "trips_by_municipality": trips,
+        "economy_by_municipality": gravity_bq.economy_by_municipality(wh, fx.YEAR),
+        "gravity_data": assemble_gravity_data(
+            distances,
+            gravity_bq.population_dim(wh, fx.YEAR),
+            gravity_bq.economy_by_municipality(wh, fx.YEAR),
+            trips,
+        ),
+        "long_trip": long_trip_dependency(trips, centroids, origin_filter=F.lit(True)),
+    }
+    for name, df in frames.items():
+        plan = pi.executed_plan(df)
+        assert not [n for n in _PYTHON_NODES if n in plan], (name, plan)
+    # the check sees a pandas UDF where there is one
+    udf = wh.read(geometry.GOLD_TABLE).select(spatial.st_centroid(F.col("geometry")))
+    assert "ArrowEvalPython" in pi.executed_plan(udf)

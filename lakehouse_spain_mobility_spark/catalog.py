@@ -17,6 +17,18 @@ Update patterns implemented:
 - ``skip_if_present``       → the count-check guards
   (dags/mitma/bronze_mitma.py:38-47, dags/mitma/silver_mitma.py:17-24)
 
+Idempotency guards (``count_where``, ``skip_if_present``) run on the
+driver with pyarrow and launch no Spark job. The predicate is a
+``pyarrow.dataset`` expression (``pads.field("date") == d``). The count
+reads the footers, skips every row group whose min/max statistics
+exclude the predicate, and decodes only the filter columns of the rest,
+so files of other writers (pyarrow history files beside Spark appends,
+with other timestamp encodings) never need a cast. Partition columns
+come from ``k=v`` directory names: an all-digit value is an integer,
+any other is its directory text (``date=2023-08-16`` compares with
+``"2023-08-16"``). ``_``/``.`` entries, such as a crashed write's
+``_temporary/``, are skipped as Spark skips them.
+
 Reads take a table's schema from its data, where the reference takes it
 from its catalog. Spark writes its exact Catalyst schema into every file
 footer (``org.apache.spark.sql.parquet.row.metadata``).
@@ -37,6 +49,7 @@ import shutil
 
 import pandas as pd
 import pyarrow as pa
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -130,9 +143,13 @@ class Warehouse:
     # --- catalog introspection (S6: information_schema / PRAGMA table_info
     # / duckdb_columns — dags/ducklake_utils.py:152-158, get_shema.py:14) ---
     def table_exists(self, name: str) -> bool:
+        """A directory with a flat data file, a ``_SUCCESS`` marker or a
+        ``k=v`` partition directory (the layout ``_first_data_file``
+        descends), whichever engine wrote it."""
         p = self.path(name)
         return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" or f.startswith("date=")
+            f.endswith(".parquet") or f == "_SUCCESS"
+            or ("=" in f and os.path.isdir(os.path.join(p, f)))
             for f in os.listdir(p)
         )
 
@@ -265,12 +282,19 @@ class Warehouse:
         self.create_or_replace(name, merged)
 
     # --- idempotency guards -------------------------------------------------
-    def count_where(self, name: str, predicate) -> int:
+    def count_where(self, name: str, predicate: pads.Expression) -> int:
+        """Rows of ``name`` matching a ``pyarrow.dataset`` expression,
+        counted on the driver (see the module docstring). A table that
+        does not exist, or an empty partitioned one (only ``_SUCCESS``, no
+        files to take a schema from), counts 0."""
         if not self.table_exists(name):
             return 0
-        return self.read(name).filter(predicate).count()
+        ds = pads.dataset(self.path(name), format="parquet", partitioning="hive")
+        if not ds.files:
+            return 0
+        return ds.count_rows(filter=predicate)
 
-    def skip_if_present(self, name: str, predicate) -> bool:
+    def skip_if_present(self, name: str, predicate: pads.Expression) -> bool:
         """True → data for this key already loaded, caller should skip
         (dags/mitma/bronze_mitma.py:38-47)."""
         return self.count_where(name, predicate) > 0

@@ -11,6 +11,7 @@ fixes Spanish-locale decimals, and keys on
 
 from __future__ import annotations
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -47,7 +48,7 @@ def silver_transform(wh: Warehouse, year: int) -> int:
     skip-if-present per year, split codes, locale-fix income, reject
     NULL/invalid keys."""
     wh.create_if_not_exists(SILVER_TABLE, SILVER_SCHEMA)
-    if wh.skip_if_present(SILVER_TABLE, F.col("year") == year):
+    if wh.skip_if_present(SILVER_TABLE, pads.field("year") == year):
         return 0
     bronze = wh.read(bronze_table_name(year))
     income = F.when(
@@ -75,4 +76,4 @@ def silver_transform(wh: Warehouse, year: int) -> int:
         .agg(F.avg("avg_income").alias("avg_income"))
     )
     wh.append(SILVER_TABLE, silver)
-    return wh.count_where(SILVER_TABLE, F.col("year") == year)
+    return wh.count_where(SILVER_TABLE, pads.field("year") == year)

@@ -11,6 +11,7 @@ the extracted gold region (``municipality_centroids``).
 
 from __future__ import annotations
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -52,7 +53,7 @@ def silver_transform(wh: Warehouse, year: int, already_wgs84: bool = False) -> i
     dags/geometry/transform_silver_geometry.py:12-29), skip-if-present per
     year."""
     wh.create_if_not_exists(SILVER_TABLE, SILVER_SCHEMA)
-    if wh.skip_if_present(SILVER_TABLE, F.col("year") == year):
+    if wh.skip_if_present(SILVER_TABLE, pads.field("year") == year):
         return 0
     bronze = wh.read(bronze_table_name(year))
     geom = (
@@ -79,7 +80,7 @@ def silver_transform(wh: Warehouse, year: int, already_wgs84: bool = False) -> i
         "year",
     )
     wh.append(SILVER_TABLE, with_centroid)
-    return wh.count_where(SILVER_TABLE, F.col("year") == year)
+    return wh.count_where(SILVER_TABLE, pads.field("year") == year)
 
 
 def extract_gold_region(
@@ -88,9 +89,9 @@ def extract_gold_region(
     """Polygon-scoped extraction → gold_geometry_wgs84
     (dags/gravity/extract_geometry.py:30-43): spatial predicate against a
     parameterized region WKT (P10), with the empty-silver guard (:15-19)."""
-    silver = wh.read(SILVER_TABLE).filter(F.col("year") == year)
-    if silver.isEmpty():
+    if wh.count_where(SILVER_TABLE, pads.field("year") == year) == 0:
         raise RuntimeError(f"silver_geometry_wgs84 empty for year={year}")
+    silver = wh.read(SILVER_TABLE).filter(F.col("year") == year)
     pred = spatial.make_polygon_predicate_udf(region_wkt, predicate)
     gold = silver.filter(pred(F.col("geometry")))
     wh.create_or_replace(GOLD_TABLE, gold)

@@ -12,6 +12,9 @@ idempotent re-run unit is a dynamic partition overwrite.
 
 from __future__ import annotations
 
+import datetime
+
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -90,10 +93,14 @@ def ensure_tables(wh: Warehouse) -> None:
 def ingest_holidays(wh: Warehouse, years: list[int]) -> None:
     """U2: Spain holidays → ref_holidays dim
     (dags/mitma/silver_mitma.py:7-52), skip-if-present per year."""
+    date = pads.field("date")
     new_years = [
         y
         for y in years
-        if not wh.skip_if_present(HOLIDAYS_TABLE, F.year(F.col("date")) == y)
+        if not wh.skip_if_present(
+            HOLIDAYS_TABLE,
+            (date >= datetime.date(y, 1, 1)) & (date <= datetime.date(y, 12, 31)),
+        )
     ]
     if not new_years:
         return
@@ -108,20 +115,22 @@ def ingest_bronze(wh: Warehouse, raw: DataFrame, file_date: str) -> bool:
 
     Idempotency ledger (dags/mitma/bronze_mitma.py:38-47 count-check-skip,
     upgraded): a re-run probes the tiny ``bronze_ingest_ledger`` table —
-    file → row-count → status — and skips WITHOUT evaluating ``raw`` or
-    scanning bronze. At 100 TB that is the difference between a no-op
-    backfill re-run and a full fact-table scan per day re-checked. The
-    bronze count-check stays as defense-in-depth for pre-ledger tables."""
-    if wh.count_where(LEDGER_TABLE, (F.col("file_date") == file_date) & (F.col("status") == "ingested")) > 0:
+    file → row-count → status — and skips WITHOUT evaluating ``raw``. The
+    bronze count-check stays as defense-in-depth for pre-ledger tables.
+    Both probes and the ledger's row count are ``Warehouse.count_where``
+    calls: answered on the driver from Parquet footers and the ``date``
+    column, with no Spark job. The day's only jobs are the two appends."""
+    ingested = (pads.field("file_date") == file_date) & (pads.field("status") == "ingested")
+    if wh.skip_if_present(LEDGER_TABLE, ingested):
         return False
-    if wh.skip_if_present(BRONZE_TABLE, F.col("date") == file_date):
+    if wh.skip_if_present(BRONZE_TABLE, pads.field("date") == file_date):
         return False
     out = raw.select(
         *[F.col(c).cast("string").alias(c) for c in BRONZE_COLUMNS],
         F.current_timestamp().alias("ingestion_date"),
     )
     wh.append(BRONZE_TABLE, out)
-    n = wh.count_where(BRONZE_TABLE, F.col("date") == file_date)
+    n = wh.count_where(BRONZE_TABLE, pads.field("date") == file_date)
     ledger_row = local_frame(
         wh.spark, [(file_date, n, "ingested")], "file_date string, n_rows bigint, status string"
     ).withColumn("ingested_at", F.current_timestamp())
@@ -133,11 +142,14 @@ def silver_transform(wh: Warehouse, file_date: str) -> int:
     """Per-date typed/cleaned silver hop (dags/mitma/silver_mitma.py:95-159):
     DELETE date partition + typed INSERT…SELECT with the cleaning battery.
     day_type is computed natively via the holidays join (U1 — the reference
-    computes it once per file in Python, :54-83,106)."""
-    bronze = wh.read(BRONZE_TABLE).filter(F.col("date") == file_date)
-    if bronze.isEmpty():  # bronze-count gate (dags/mitma/silver_mitma.py:110-117)
-        return 0
+    computes it once per file in Python, :54-83,106).
 
+    The bronze-count gate (dags/mitma/silver_mitma.py:110-117) and the
+    returned silver count are ``Warehouse.count_where`` probes with no
+    Spark job; the partition write is the hop's only Spark work."""
+    if wh.count_where(BRONZE_TABLE, pads.field("date") == file_date) == 0:
+        return 0
+    bronze = wh.read(BRONZE_TABLE).filter(F.col("date") == file_date)
     holidays = F.broadcast(wh.read(HOLIDAYS_TABLE))
     typed = bronze.select(
         F.to_date(F.col("date"), "yyyyMMdd").alias("date"),
@@ -166,7 +178,9 @@ def silver_transform(wh: Warehouse, file_date: str) -> int:
         scalar.day_type(F.col("date"), F.col("is_holiday")).alias("day_type"),
     )
     wh.replace_partition(SILVER_TABLE, silver, "date")
-    return wh.count_where(SILVER_TABLE, F.col("date") == F.to_date(F.lit(file_date), "yyyyMMdd"))
+    # hive discovery reads the ``date=2023-08-16`` directory as text
+    iso = f"{file_date[:4]}-{file_date[4:6]}-{file_date[6:]}"
+    return wh.count_where(SILVER_TABLE, pads.field("date") == iso)
 
 
 def gold_typical_day(wh: Warehouse, with_outlier_filter: bool = True) -> DataFrame:

@@ -9,6 +9,7 @@ rows, strips thousands separators with the digit-only regex, and keys on
 
 from __future__ import annotations
 
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -40,7 +41,7 @@ def ingest_bronze(wh: Warehouse, raw: DataFrame, year: int) -> None:
 
 def silver_transform(wh: Warehouse, year: int) -> int:
     wh.create_if_not_exists(SILVER_TABLE, SILVER_SCHEMA)
-    if wh.skip_if_present(SILVER_TABLE, F.col("year") == year):
+    if wh.skip_if_present(SILVER_TABLE, pads.field("year") == year):
         return 0
     bronze = wh.read(bronze_table_name(year))
     silver = (
@@ -64,4 +65,4 @@ def silver_transform(wh: Warehouse, year: int) -> int:
         .agg(F.sum("population").alias("population"))
     )
     wh.append(SILVER_TABLE, silver)
-    return wh.count_where(SILVER_TABLE, F.col("year") == year)
+    return wh.count_where(SILVER_TABLE, pads.field("year") == year)

@@ -1,9 +1,11 @@
-"""Warehouse reads take the schema from one Parquet footer.
+"""Warehouse reads take the schema from one Parquet footer, and probes
+are answered from Parquet metadata.
 
 ``Warehouse.read`` must give the schema ``spark.read.parquet`` infers,
 for every kind of table the daily cycle keeps, while launching no Spark
-job of its own; the probes built on it launch only the job that computes
-their answer.
+job of its own. ``Warehouse.count_where`` runs on the driver with
+pyarrow: it must give the answer the same filter gives through Spark,
+and launch no job.
 """
 
 from __future__ import annotations
@@ -12,10 +14,12 @@ import datetime
 import os
 
 import pyarrow as pa
+import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from lakehouse_spain_mobility_spark.catalog import (
     Warehouse,
@@ -43,6 +47,15 @@ def bronze_day(spark, date: str, n: int = 3):
     return spark.createDataFrame(rows, mitma.BRONZE_COLUMNS).withColumn(
         "ingestion_date", F.current_timestamp()
     )
+
+
+def utc_micros(table: pa.Table) -> pa.Table:
+    """Spark-written rows as the benchmark's pyarrow history files hold
+    them: timestamps as UTC micros instead of INT96."""
+    return table.cast(pa.schema([
+        f.with_type(pa.timestamp("us", tz="UTC")) if pa.types.is_timestamp(f.type) else f
+        for f in table.schema
+    ]))
 
 
 def assert_schema_parity(wh: Warehouse, name: str) -> None:
@@ -111,11 +124,7 @@ def test_mixed_spark_and_pyarrow_files(spark, wh):
     name = "bronze_mixed"
     wh.create_if_not_exists(name, mitma.BRONZE_SCHEMA)
     wh.append(name, bronze_day(spark, "20230102"))
-    day = pq.read_table(wh.path(name))
-    day = day.cast(pa.schema([
-        f.with_type(pa.timestamp("us", tz="UTC")) if pa.types.is_timestamp(f.type) else f
-        for f in day.schema
-    ]))
+    day = utc_micros(pq.read_table(wh.path(name)))
     pq.write_table(day, os.path.join(wh.path(name), "part-history-00000.snappy.parquet"))
     assert_schema_parity(wh, name)
     assert wh.read(name).count() == 2 * day.num_rows
@@ -144,20 +153,19 @@ def test_read_launches_no_job(spark, wh):
     assert jobs_launched(spark, lambda: spark.read.parquet(wh.path("jobs_flat"))) == 1
 
 
-def test_count_where_launches_only_the_count(spark, wh):
-    """The probe's jobs are its count's (a count is two jobs under
-    adaptive execution: the partial aggregate's stage, then the result),
-    one fewer than a count over an inferred read."""
+def test_count_where_launches_no_job(spark, wh):
+    """The probe reads footers and one column on the driver, where the
+    same count through Spark launches jobs (two under adaptive execution:
+    the partial aggregate's stage, then the result)."""
     wh.append(mitma.BRONZE_TABLE, bronze_day(spark, "20230109"))
-    pred = F.col("date") == "20230109"
-    path = wh.path(mitma.BRONZE_TABLE)
     df = wh.read(mitma.BRONZE_TABLE)
-    count_alone = jobs_launched(spark, lambda: df.filter(pred).count())
+    assert jobs_launched(spark, lambda: df.filter(F.col("date") == "20230109").count()) > 0
     counted = []
-    probe = jobs_launched(spark, lambda: counted.append(wh.count_where(mitma.BRONZE_TABLE, pred)))
-    inferred = jobs_launched(spark, lambda: spark.read.parquet(path).filter(pred).count())
-    assert counted == [3]
-    assert probe == count_alone and inferred == count_alone + 1
+    probe = jobs_launched(
+        spark,
+        lambda: counted.append(wh.count_where(mitma.BRONZE_TABLE, pads.field("date") == "20230109")),
+    )
+    assert counted == [3] and probe == 0
 
 
 def test_last_status_launches_one_job(spark, wh):
@@ -167,3 +175,109 @@ def test_last_status_launches_one_job(spark, wh):
         spark, lambda: statuses.append(orchestrate.last_status(wh, "probe", "k1"))
     ) == 1
     assert statuses == ["success"]
+
+
+# --- count_where gives the answer the same filter gives through Spark -------
+@pytest.fixture(scope="module")
+def boot(spark, tmp_path_factory):
+    """A warehouse holding only the bootstrap tables, never written to."""
+    wh = Warehouse(spark, str(tmp_path_factory.mktemp("wh_boot")))
+    mitma.ensure_tables(wh)
+    return wh
+
+
+def test_count_where_on_bronze_of_two_writers(spark, wh):
+    """Spark appends (INT96 ``ingestion_date``) plus pyarrow files, one of
+    them first in sorted order, so the dataset takes its schema from a
+    pyarrow file and the Spark files' timestamps never match it."""
+    name = "bronze_probe_mixed"
+    wh.create_if_not_exists(name, mitma.BRONZE_SCHEMA)
+    wh.append(name, bronze_day(spark, "20230102"))
+    wh.append(name, bronze_day(spark, "20230103", n=2))
+    spark_day = pq.read_table(wh.path(name), filters=[("date", "=", "20230102")])
+    history = utc_micros(spark_day)
+    for file, date in (("history-00000.snappy.parquet", "20221230"),
+                       ("part-history-00000.snappy.parquet", "20221231")):
+        dated = history.set_column(history.schema.get_field_index("date"), "date",
+                                   pa.array([date] * history.num_rows))
+        pq.write_table(dated, os.path.join(wh.path(name), file))
+    dataset_ts = pads.dataset(wh.path(name)).schema.field("ingestion_date").type
+    assert dataset_ts == pa.timestamp("us", tz="UTC") != spark_day.schema.field("ingestion_date").type
+    counts = [
+        (wh.count_where(name, pads.field("date") == d), wh.read(name).filter(F.col("date") == d).count())
+        for d in ("20221230", "20221231", "20230102", "20230103", "20230104")
+    ]
+    assert counts == [(3, 3), (3, 3), (3, 3), (2, 2), (0, 0)]
+
+
+def test_count_where_on_date_partitioned_silver(spark, wh):
+    """Hive discovery reads ``date=2023-01-02`` as text."""
+    rows = [(datetime.date(2023, 1, d), h, "A", "B", 1.0, 1) for d in (2, 3) for h in range(d)]
+    wh.create_or_replace("silver_probe", spark.createDataFrame(rows, mitma.SILVER_SCHEMA), partition_by=["date"])
+    wh.replace_partition(
+        "silver_probe", spark.createDataFrame(rows[:1], mitma.SILVER_SCHEMA).withColumn(
+            "date", F.lit(datetime.date(2023, 1, 4))), "date")
+    silver = wh.read("silver_probe")
+    counts = [
+        (wh.count_where("silver_probe", pads.field("date") == d.isoformat()),
+         silver.filter(F.col("date") == d).count())
+        for d in (datetime.date(2023, 1, day) for day in (1, 2, 3, 4))
+    ]
+    assert counts == [(0, 0), (2, 2), (3, 3), (1, 1)]
+
+
+@pytest.mark.parametrize(
+    "table, column, value",
+    [
+        (mitma.BRONZE_TABLE, "date", "20230102"),
+        (mitma.LEDGER_TABLE, "file_date", "20230102"),
+        (mitma.SILVER_TABLE, "date", "2023-01-02"),
+    ],
+)
+def test_count_where_on_empty_bootstrap_tables(spark, boot, table, column, value):
+    """Flat bootstrap tables hold one empty file; the partitioned silver
+    holds only ``_SUCCESS``, so Spark needs the schema given to read it."""
+    schema = {mitma.SILVER_TABLE: mitma.SILVER_SCHEMA}.get(table)
+    df = boot.read(table) if schema is None else spark.read.schema(schema).parquet(boot.path(table))
+    assert df.filter(F.col(column) == value).count() == 0
+    assert boot.count_where(table, pads.field(column) == value) == 0
+
+
+def test_count_where_skips_a_crashed_writes_temporary_dir(spark, wh):
+    name = "bronze_probe_temporary"
+    wh.append(name, bronze_day(spark, "20230105"))
+    leftover = os.path.join(wh.path(name), "_temporary", "0", "_temporary", "attempt_0")
+    os.makedirs(leftover)
+    pq.write_table(pq.read_table(wh.path(name)), os.path.join(leftover, "part-00000.snappy.parquet"))
+    probe = pads.field("date") == "20230105"
+    assert wh.count_where(name, probe) == wh.read(name).filter(F.col("date") == "20230105").count() == 3
+
+
+def test_count_where_holidays_year_range(spark, tmp_path):
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    mitma.ensure_tables(wh)
+    mitma.ingest_holidays(wh, [2023, 2024])
+    holidays = wh.read(mitma.HOLIDAYS_TABLE)
+    date = pads.field("date")
+    counts = [
+        (wh.count_where(mitma.HOLIDAYS_TABLE,
+                        (date >= datetime.date(y, 1, 1)) & (date <= datetime.date(y, 12, 31))),
+         holidays.filter(F.year("date") == y).count())
+        for y in (2022, 2023, 2024)
+    ]
+    assert counts[0] == (0, 0) and all(a == b > 0 for a, b in counts[1:])
+    mitma.ingest_holidays(wh, [2023])  # present: appends nothing
+    assert wh.read(mitma.HOLIDAYS_TABLE).count() == holidays.count()
+
+
+def test_pyarrow_partitioned_table_survives_create_if_not_exists(spark, tmp_path):
+    """A ``year=``-partitioned table with neither ``_SUCCESS`` nor a flat
+    file, as pyarrow writes it, is a table: the bootstrap keeps its rows."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    rows = pa.table({"code": ["01001", "01002", "01003"], "year": pa.array([2023, 2023, 2024], pa.int32())})
+    pq.write_to_dataset(rows, wh.path("arrow_by_year"), partition_cols=["year"])
+    assert wh.table_exists("arrow_by_year")
+    wh.create_if_not_exists("arrow_by_year", T.StructType(
+        [T.StructField("code", T.StringType()), T.StructField("year", T.IntegerType())]), ["year"])
+    assert wh.count_where("arrow_by_year", pads.field("year") == 2023) == 2
+    assert wh.read("arrow_by_year").filter(F.col("year") == 2023).count() == 2

@@ -7,18 +7,30 @@ from __future__ import annotations
 
 import shutil
 
+import pyarrow.dataset as pads
 import pytest
 from pyspark.sql import functions as F
 
 import fixtures as fx
 from lakehouse_spain_mobility_spark.catalog import Warehouse
 from lakehouse_spain_mobility_spark.operators import spatial
-from lakehouse_spain_mobility_spark.pipelines import economy, geometry, gravity_bq, mitma, population
+from lakehouse_spain_mobility_spark.pipelines import (
+    economy,
+    geometry,
+    gravity_bq,
+    mitma,
+    orchestrate,
+    population,
+)
 from lakehouse_spain_mobility_spark.sources.csv import read_csv_inferred
 
 from conftest import jobs_launched
 
 JOB_BUDGET_BQ2_BQ3 = 19
+# A day's Spark jobs: the bronze and ingest-ledger appends, the silver
+# partition write (two jobs), the run-ledger append and the run-ledger
+# lookup (``orchestrate.last_status``). The idempotency probes launch none.
+JOB_BUDGET_DAY = 6
 
 
 @pytest.fixture(scope="module")
@@ -86,7 +98,7 @@ def test_bronze_ingest_ledger_skips_reread(wh, spark):
     ledger = wh.read(mitma.LEDGER_TABLE)
     assert ledger.filter(F.col("status") == "ingested").count() == len(fx.DATES)
     row = ledger.filter(F.col("file_date") == fx.DATES[0]).collect()[0]
-    bronze_n = wh.count_where(mitma.BRONZE_TABLE, F.col("date") == fx.DATES[0])
+    bronze_n = wh.count_where(mitma.BRONZE_TABLE, pads.field("date") == fx.DATES[0])
     assert row["n_rows"] == bronze_n and row["n_rows"] > 0
 
     @F.udf(T.StringType())
@@ -235,6 +247,33 @@ def test_bq2_bq3_job_budget(wh, spark):
         ),
     )
     assert n <= JOB_BUDGET_BQ2_BQ3, n
+
+
+def test_day_job_budget(spark, tmp_path):
+    """One fixture day through ``orchestrate.backfill``, on a warehouse
+    that already holds a day of bronze and silver, stays within its Spark
+    job budget: the idempotency probes (ledger, both bronze probes, the
+    silver gate and count) are answered from Parquet metadata on the
+    driver."""
+    day_wh = Warehouse(spark, str(tmp_path / "wh"))
+    mitma.ensure_tables(day_wh)
+    mitma.ingest_holidays(day_wh, [fx.YEAR])
+    rows = fx.mitma_bronze_rows()
+
+    def ingest(date):
+        mitma.ingest_bronze(day_wh, spark.createDataFrame(rows[date], mitma.BRONZE_COLUMNS), date)
+        return mitma.silver_transform(day_wh, date)
+
+    first, second = fx.DATES[:2]
+    assert orchestrate.backfill(day_wh, "mitma_daily", [first], ingest) == {first: "success"}
+    statuses = []
+    n = jobs_launched(
+        spark, lambda: statuses.append(orchestrate.backfill(day_wh, "mitma_daily", [second], ingest))
+    )
+    assert statuses == [{second: "success"}]
+    assert n <= JOB_BUDGET_DAY, n
+    iso = f"{second[:4]}-{second[4:6]}-{second[6:]}"
+    assert day_wh.count_where(mitma.SILVER_TABLE, pads.field("date") == iso) > 0
 
 
 def test_silver_partition_pruning(wh):

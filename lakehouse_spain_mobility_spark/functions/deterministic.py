@@ -22,6 +22,12 @@ Two portability traps this design dodges (found empirically):
   (DuckDB's int128 path vs Java's BigDecimal); casting through a string is
   correctly rounded in both.
 
+Overflow is the engine's check, not ours: the exact sums rely on ANSI mode
+(``spark.sql.ansi.enabled=true``, pinned by ``session.build_session``),
+under which ``CAST(ROUND(x·1e6) AS BIGINT)`` raises ``CAST_OVERFLOW`` and a
+long ``SUM`` (aggregate or window) raises ``ARITHMETIC_OVERFLOW`` instead
+of wrapping. A session with ANSI off would return wrong bytes silently.
+
 This costs a few % vs native double sums but buys bit-exact reproducibility
 across partitionings — a 1000-executor run returns the same bytes as a
 laptop run, a property worth keeping at 100 TB.
@@ -57,28 +63,6 @@ def _lit(key: str, value) -> Column:
     return c
 
 
-def _overflow_guard(total: Column, n: Column, mg: Column) -> Column:
-    """Loud overflow detection for the long fast path: the guarded value
-    is returned only while the group stays inside the provable-safe
-    envelope (|m| < 2⁶², < 2³¹ rows/group, HI-sum headroom)."""
-    ok = (n == 0) | (
-        (mg >= 0)
-        & (mg < _lit("b62", 1 << 62))
-        & (n < _lit("p31", _POW31))
-        & (((F.shiftright(mg, 31) + _lit("one", 1)).cast("double") * n) < _lit("b61f", float(1 << 61)))
-    )
-    return F.when(ok, total).otherwise(
-        F.raise_error(
-            _lit(
-                "ovmsg",
-                "dsum overflow: group exceeds the long fast-path envelope "
-                "(|x·1e6| < 2^62, < 2^31 rows/group); use the DECIMAL(38,0) "
-                "slow path for this column",
-            )
-        )
-    )
-
-
 def _scaled_sum(col: Column) -> Column:
     """Exact fixed-point sum: ROUND(x·1e6) summed exactly — long fast path.
 
@@ -101,20 +85,21 @@ def _scaled_sum(col: Column) -> Column:
     twin (``_sql_scaled_sum`` — DuckDB's int128 decimal sum is natively
     fast) still hash-matches bit for bit.
 
-    Overflow is detected, never silent: the guard below raises when a
-    group leaves the provable-safe envelope (|m| < 2⁶², < 2³¹ rows per
-    group, and HI-sum headroom (max|m|>>31 + 1)·n < 2⁶¹ — at 1e9-unit
-    values that is ~10¹² rows per group before it trips). Past the
-    envelope, rebuild with the decimal form (swap this body for
+    Overflow is detected, never silent, by ANSI mode (the session pins
+    it): a value with |x·1e6| ≥ 2⁶³ fails the BIGINT cast
+    (``CAST_OVERFLOW``), and a hi or lo partial that leaves long range
+    fails the SUM (``ARITHMETIC_OVERFLOW``). The hi/lo split lets the
+    group total itself pass 2⁶³ micro-units: the lo partial holds for
+    2³² rows per group, the hi partial for 2⁶³/(|m|>>31) rows.
+    Past either, rebuild with the decimal form (swap this body for
     ``F.sum(m.cast("decimal(38,0)"))``) — correctness degrades loudly to
     a slower plan, not to wrong bytes.
     """
     m = F.round(col * _lit("scale", _SCALE)).cast("bigint")
-    total = (
+    return (
         F.sum(F.shiftright(m, 31)).cast("decimal(38,0)") * _lit("p31", _POW31)
         + F.sum(m.bitwiseAND(_lit("mask31", _MASK31))).cast("decimal(38,0)")
     )
-    return _overflow_guard(total, F.count(m), F.max(F.abs(m)))
 
 
 _B53F = float(1 << 53)
@@ -124,12 +109,12 @@ def dsum_rollup_guard(col: Column) -> Column:
     """Exactness guard for re-aggregating a :func:`dsum` output.
 
     A dsum result is a DOUBLE; feeding it back through another fixed-point
-    round-trip (``ROUND(x·1e6)`` in :func:`dsum_over`/:func:`micro`) is
+    round-trip (``ROUND(x·1e6)`` in :func:`dsum`/:func:`micro`) is
     exact only while the group's micro sum is double-representable —
-    |x|·1e6 < 2⁵³ (~9e9 currency units per group). The long-path
-    ``_overflow_guard`` only trips near 2⁶²; past 2⁵³ the round-trip
-    would silently lose low bits. Wrap the re-aggregated column so the
-    query degrades loudly instead (the module invariant)."""
+    |x|·1e6 < 2⁵³ (~9e9 currency units per group). ANSI overflow checks
+    only fire at 2⁶³; past 2⁵³ the round-trip would silently lose low
+    bits. Wrap the re-aggregated column so the query degrades loudly
+    instead (the module invariant)."""
     ok = col.isNull() | (F.abs(col) * _lit("scale", _SCALE) < _lit("b53f", _B53F))
     return F.when(ok, col).otherwise(
         F.raise_error(
@@ -141,21 +126,6 @@ def dsum_rollup_guard(col: Column) -> Column:
             )
         )
     )
-
-
-def dsum_over(col: Column, w) -> Column:
-    """Window twin of :func:`dsum`: order-independent SUM(double) OVER w.
-
-    Same hi/lo long split as :func:`_scaled_sum` with each partial applied
-    ``.over(w)`` — window frames share one sort, so the extra long buffers
-    are marginal while the per-row BigDecimal adds disappear."""
-    m = F.round(col * _lit("scale", _SCALE)).cast("bigint")
-    total = (
-        F.sum(F.shiftright(m, 31)).over(w).cast("decimal(38,0)") * _lit("p31", _POW31)
-        + F.sum(m.bitwiseAND(_lit("mask31", _MASK31))).over(w).cast("decimal(38,0)")
-    )
-    guarded = _overflow_guard(total, F.count(m).over(w), F.max(F.abs(m)).over(w))
-    return _dec2dbl(guarded) / _lit("scale", _SCALE)
 
 
 def _sql_scaled_sum(expr: str) -> str:
@@ -227,25 +197,20 @@ def sql_dstddev_samp(expr: str) -> str:
 # query builders whenever the input is expressible as SQL text.
 
 
-def _spark_split_sum(expr: str) -> str:
-    m = f"CAST(ROUND(({expr}) * 1000000.0) AS BIGINT)"
-    hi = f"SUM(SHIFTRIGHT({m}, 31))"
-    lo = f"SUM({m} & {_MASK31})"
-    n = f"COUNT({m})"
-    mg = f"MAX(ABS({m}))"
-    total = f"(CAST({hi} AS DECIMAL(38,0)) * {_POW31} + CAST({lo} AS DECIMAL(38,0)))"
-    ok = (
-        f"({n} = 0) OR ({mg} >= 0 AND {mg} < {1 << 62} AND {n} < {_POW31} "
-        f"AND (CAST(SHIFTRIGHT({mg}, 31) + 1 AS DOUBLE) * {n}) < CAST({float(1 << 61)} AS DOUBLE))"
-    )
-    return (
-        f"(CASE WHEN {ok} THEN {total} "
-        f"ELSE RAISE_ERROR('dsum overflow: long fast-path envelope exceeded') END)"
-    )
+def _spark_split_sum(expr: str, weight: str = "", over: str = "") -> str:
+    """SQL text of :func:`_scaled_sum`'s hi/lo long split. ``weight``
+    multiplies each row's partials (the weighted twins below); ``over``
+    is a window clause that both partial aggregates carry (one shared
+    frame sort)."""
+    m = spark_micro(expr)
+    w = f" * ({weight})" if weight else ""
+    hi = f"SUM(SHIFTRIGHT({m}, 31){w}){over}"
+    lo = f"SUM(({m} & {_MASK31}){w}){over}"
+    return f"(CAST({hi} AS DECIMAL(38,0)) * {_POW31} + CAST({lo} AS DECIMAL(38,0)))"
 
 
 def spark_dsum(expr: str) -> str:
-    """Spark-SQL text of :func:`dsum` (same guarded hi/lo long split)."""
+    """Spark-SQL text of :func:`dsum` (same hi/lo long split)."""
     return f"(CAST(CAST({_spark_split_sum(expr)} AS STRING) AS DOUBLE) / 1000000.0)"
 
 
@@ -275,28 +240,10 @@ def spark_dstddev_samp0(expr: str) -> str:
 # the hi/lo split is linear (m·c = (m>>31)·c·2³¹ + (m&mask)·c in plain
 # integer arithmetic), so the weighted sums recombine to the *same exact
 # integer* the row-level dsum produces, and every closing DOUBLE op keeps
-# the identical expression shape. The overflow envelope is the row-level
-# one evaluated at the EXPANDED row count n = Σcnt (same guard semantics;
-# the weighted partials stay inside long range whenever the guard passes:
-# |hi| <= (mg>>31+1)·n < 2⁶¹ and lo < 2³¹·n < 2⁶²). Precondition: cnt >= 1.
+# the identical expression shape. Overflow stays ANSI's check: a per-row
+# product (m>>31)·cnt or (m&mask)·cnt past long range raises
+# ARITHMETIC_OVERFLOW, as does a partial SUM. Precondition: cnt >= 1.
 # NULL values carry zero weight (mirrors COUNT/SUM null-skipping).
-
-
-def _spark_wsplit_sum(expr: str, cnt: str) -> str:
-    m = f"CAST(ROUND(({expr}) * 1000000.0) AS BIGINT)"
-    hi = f"SUM(SHIFTRIGHT({m}, 31) * ({cnt}))"
-    lo = f"SUM(({m} & {_MASK31}) * ({cnt}))"
-    n = spark_wcount(expr, cnt)
-    mg = f"MAX(ABS({m}))"
-    total = f"(CAST({hi} AS DECIMAL(38,0)) * {_POW31} + CAST({lo} AS DECIMAL(38,0)))"
-    ok = (
-        f"({n} = 0) OR ({mg} >= 0 AND {mg} < {1 << 62} AND {n} < {_POW31} "
-        f"AND (CAST(SHIFTRIGHT({mg}, 31) + 1 AS DOUBLE) * {n}) < CAST({float(1 << 61)} AS DOUBLE))"
-    )
-    return (
-        f"(CASE WHEN {ok} THEN {total} "
-        f"ELSE RAISE_ERROR('dsum overflow: long fast-path envelope exceeded') END)"
-    )
 
 
 def spark_wcount(expr: str, cnt: str) -> str:
@@ -307,7 +254,7 @@ def spark_wcount(expr: str, cnt: str) -> str:
 def spark_wdsum(expr: str, cnt: str) -> str:
     """Weighted :func:`spark_dsum`: exact fixed-point SUM over a
     (value, cnt) cube — bit-identical to the row-level sum."""
-    return f"(CAST(CAST({_spark_wsplit_sum(expr, cnt)} AS STRING) AS DOUBLE) / 1000000.0)"
+    return f"(CAST(CAST({_spark_split_sum(expr, weight=cnt)} AS STRING) AS DOUBLE) / 1000000.0)"
 
 
 def spark_wdavg(expr: str, cnt: str) -> str:
@@ -338,44 +285,14 @@ def xdavg(expr: str) -> Column:
     return F.expr(spark_davg(expr))
 
 
-def xmicro_dsum(expr: str) -> Column:
-    """The common output composition ``micro(dsum(x))`` as one F.expr."""
-    return F.expr(spark_micro(spark_dsum(expr)))
-
-
-def xmicro_davg(expr: str) -> Column:
-    return F.expr(spark_micro(spark_davg(expr)))
-
-
 def xdstddev_samp0(expr: str) -> Column:
     return F.expr(spark_dstddev_samp0(expr))
 
 
-def _spark_split_sum_over(expr: str, over: str) -> str:
-    """Window form of :func:`_spark_split_sum`: every partial aggregate
-    carries the OVER clause (one shared frame sort)."""
-    m = f"CAST(ROUND(({expr}) * 1000000.0) AS BIGINT)"
-    hi = f"SUM(SHIFTRIGHT({m}, 31)) {over}"
-    lo = f"SUM({m} & {_MASK31}) {over}"
-    n = f"COUNT({m}) {over}"
-    mg = f"MAX(ABS({m})) {over}"
-    total = f"(CAST({hi} AS DECIMAL(38,0)) * {_POW31} + CAST({lo} AS DECIMAL(38,0)))"
-    ok = (
-        f"({n} = 0) OR ({mg} >= 0 AND {mg} < {1 << 62} AND {n} < {_POW31} "
-        f"AND (CAST(SHIFTRIGHT({mg}, 31) + 1 AS DOUBLE) * {n}) < CAST({float(1 << 61)} AS DOUBLE))"
-    )
-    return (
-        f"(CASE WHEN {ok} THEN {total} "
-        f"ELSE RAISE_ERROR('dsum overflow: long fast-path envelope exceeded') END)"
-    )
-
-
 def spark_dsum_over(expr: str, partition_by: str) -> str:
-    """Spark-SQL text of :func:`dsum_over` with ``OVER (PARTITION BY ...)``."""
-    over = f"OVER (PARTITION BY {partition_by})"
-    return (
-        f"(CAST(CAST({_spark_split_sum_over(expr, over)} AS STRING) AS DOUBLE) / 1000000.0)"
-    )
+    """Window form of :func:`spark_dsum` with ``OVER (PARTITION BY ...)``."""
+    split = _spark_split_sum(expr, over=f" OVER (PARTITION BY {partition_by})")
+    return f"(CAST(CAST({split} AS STRING) AS DOUBLE) / 1000000.0)"
 
 
 def dstddev_samp0(col: Column) -> Column:

@@ -83,16 +83,22 @@ def sigma_filtered_stats_window(
     # composite davg/dstd helpers are arithmetic over aggregates, so build
     # the fixed-point moments explicitly (mirroring functions/deterministic)
     # and close the math outside the window — as SQL text, one F.expr per
-    # output column (driver-side build cost, PERF.md round 3).
-    s1 = spark_dsum_over(value_col, pb)
-    s2 = spark_dsum_over(f"({value_col}) * ({value_col})", pb)
-    n = f"COUNT({value_col}) OVER (PARTITION BY {pb})"
-    var = f"(({s2} - {s1} * {s1} / {n}) / ({n} - 1))"
+    # output column (driver-side build cost, PERF.md round 3). The moments
+    # are columns of one select: Catalyst does not deduplicate a window
+    # aggregate repeated across expressions, so writing s1 and n into both
+    # _mu and _sigma would compute them three times per row.
+    moments = df.select(
+        "*",
+        F.expr(spark_dsum_over(value_col, pb)).alias("_s1"),
+        F.expr(spark_dsum_over(f"({value_col}) * ({value_col})", pb)).alias("_s2"),
+        F.expr(f"COUNT({value_col}) OVER (PARTITION BY {pb})").alias("_n"),
+    )
+    var = "((_s2 - _s1 * _s1 / _n) / (_n - 1))"
     sigma = (
-        f"CASE WHEN {n} > 1 THEN SQRT(GREATEST({var}, CAST(0.0 AS DOUBLE))) "
+        f"CASE WHEN _n > 1 THEN SQRT(GREATEST({var}, CAST(0.0 AS DOUBLE))) "
         f"ELSE CAST(NULL AS DOUBLE) END"
     )
-    with_stats = df.withColumn("_mu", F.expr(f"({s1} / {n})")).withColumn(
+    with_stats = moments.withColumn("_mu", F.expr("(_s1 / _n)")).withColumn(
         "_sigma", F.expr(f"COALESCE({sigma}, CAST(0.0 AS DOUBLE))")
     )
     band_lo = F.col("_mu") - n_sigma * F.col("_sigma")

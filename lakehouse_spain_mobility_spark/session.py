@@ -12,6 +12,8 @@ Design notes for scale (100 TB / 1000-executor target):
 - Arrow enabled so every pandas-UDF boundary is vectorized.
 - Session timezone pinned UTC so timestamp semantics are portable and
   match columnar engines (DuckDB oracle) bit-for-bit.
+- ANSI mode pinned on: long overflow raises rather than wraps, which the
+  exact fixed-point sums (``functions/deterministic.py``) depend on.
 """
 
 from __future__ import annotations
@@ -117,6 +119,9 @@ def build_session(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
+    # After extra_conf, so no caller can switch off the overflow errors
+    # the exact sums rely on (see the module docstring).
+    builder = builder.config("spark.sql.ansi.enabled", "true")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -234,3 +234,84 @@ def test_dsum_rollup_guard_raises_past_double_exact_bound(spark):
     assert ok[0]["v"] == 1.0e9 and ok[0]["n"] is None
     with pytest.raises(Exception, match="rollup overflow"):
         spark.range(1).select(dsum_rollup_guard(F.lit(1.0e10)).alias("v")).collect()
+
+
+def _duckdb_dsum(values):
+    import duckdb
+
+    from lakehouse_spain_mobility_spark.functions.deterministic import sql_dsum
+
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE TABLE t (v DOUBLE)")
+        con.executemany("INSERT INTO t VALUES (?)", [(v,) for v in values])
+        return con.execute(f"SELECT {sql_dsum('v')} FROM t").fetchone()[0]
+    finally:
+        con.close()
+
+
+def test_dsum_exact_up_to_the_bigint_range(spark):
+    """The exact sum fails only where a value really overflows: |x·1e6|
+    between 2^62 and 2^63 sums exactly, and a total past 2^63 micro-units
+    stays exact through the hi/lo recombination — both equal DuckDB's
+    DECIMAL(38,0) twin bit for bit."""
+    from lakehouse_spain_mobility_spark.functions.deterministic import xdsum
+
+    for values in ([5.0e12], [4.0e12] * 4, [5.0e12, -3.0e12, 1.000001]):
+        df = spark.createDataFrame([(v,) for v in values], "v double")
+        got = df.agg(xdsum("v").alias("s")).collect()[0]["s"]
+        assert got == _duckdb_dsum(values) == sum(values), (values, got)
+
+
+def test_dsum_overflow_raises_cast_overflow(spark):
+    """|x| ≥ 9.3e12 puts ROUND(x·1e6) past BIGINT: ANSI raises
+    CAST_OVERFLOW in the aggregate, window and weighted forms alike."""
+    import pytest
+
+    from lakehouse_spain_mobility_spark.functions.deterministic import (
+        spark_dsum_over,
+        spark_wdsum,
+        xdsum,
+    )
+
+    for v in (9.3e12, -9.3e12):
+        df = spark.createDataFrame([("a", v, 1)], "k string, v double, _cnt bigint")
+        for q in (
+            df.agg(xdsum("v")),
+            df.select(F.expr(spark_dsum_over("v", "k"))),
+            df.agg(F.expr(spark_wdsum("v", "_cnt"))),
+        ):
+            with pytest.raises(Exception, match="CAST_OVERFLOW"):
+                q.collect()
+
+
+def test_weighted_dsum_huge_count_raises_arithmetic_overflow(spark):
+    """A weighted partial past long range raises ARITHMETIC_OVERFLOW: the
+    per-row product (one row) and the partial SUM (two rows, each product
+    in range) alike."""
+    import pytest
+
+    from lakehouse_spain_mobility_spark.functions.deterministic import spark_wdsum
+
+    for rows in ([(1.0, 1 << 62)], [(1.0, 5 * 10**12)] * 2):
+        df = spark.createDataFrame(rows, "v double, _cnt bigint")
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            df.agg(F.expr(spark_wdsum("v", "_cnt"))).collect()
+
+
+def test_build_session_pins_ansi_after_extra_conf(spark):
+    """The exact sums rely on ANSI overflow errors, so a caller's
+    extra_conf cannot switch ANSI off."""
+    from lakehouse_spain_mobility_spark.session import build_session
+
+    conf = spark.conf
+    same = build_session(
+        master=spark.sparkContext.master,
+        shuffle_partitions=int(conf.get("spark.sql.shuffle.partitions")),
+        extra_conf={
+            "spark.sql.warehouse.dir": conf.get("spark.sql.warehouse.dir"),
+            "spark.sql.ansi.enabled": "false",
+        },
+    )
+    assert same is spark
+    assert conf.get("spark.sql.ansi.enabled") == "true"

@@ -822,3 +822,25 @@ def test_gold_refresh_frames_run_no_python_udf(refresh_wh):
     # the check sees a pandas UDF where there is one
     udf = wh.read(geometry.GOLD_TABLE).select(spatial.st_centroid(F.col("geometry")))
     assert "ArrowEvalPython" in pi.executed_plan(udf)
+
+
+def test_exact_sum_is_two_long_sums(spark):
+    """One exact sum is its hi and lo long SUMs and nothing more: ANSI
+    mode raises on overflow, so no COUNT, MAX or RAISE_ERROR envelope is
+    compiled into the aggregate. BQ1's 3σ window computes each moment
+    once: one Window node with the four SUMs of Σx and Σx² and one COUNT."""
+    from lakehouse_spain_mobility_spark.functions.deterministic import xdsum
+    from lakehouse_spain_mobility_spark.operators.outlier_stats import (
+        sigma_filtered_stats_window,
+    )
+
+    df = spark.createDataFrame([("a", 1.5, "2023-01-01")], "k string, v double, d string")
+    plan = pi.optimized_plan(df.groupBy("k").agg(xdsum("v").alias("s"))).lower()
+    assert plan.count("sum(") == 2, plan
+    assert not [f for f in ("max(", "count(", "raise_error") if f in plan], plan
+
+    plan = pi.optimized_plan(sigma_filtered_stats_window(df, ["k"], "v", "d")).lower()
+    windows = [line for line in plan.splitlines() if "window [" in line]
+    assert len(windows) == 1, plan
+    assert windows[0].count("windowspecdefinition") == 5, windows[0]
+    assert windows[0].count("sum(") == 4 and "raise_error" not in plan, windows[0]
